@@ -15,9 +15,12 @@ ever committed once and readers see only committed manifests.
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
@@ -37,38 +40,72 @@ class JobSummary:
         return sum(len(c["partitions"]) for c in self.commits)
 
 
-def _partition_metrics(input_batch: DataFrame, written: DataFrame) -> dict[int, dict]:
-    """Per-partition lineage row fields (FIXTURES.md §5).
+# Output-side lineage, summed per partition by the write pass itself (one
+# `sum(CASE WHEN part = p ...)` per metric and partition: observed metrics
+# reject FILTER clauses).  The observed node sits in the write's result
+# stage, whose accumulator updates Spark applies once per partition, so the
+# sums stay exact under task retries.
+_OUT_METRICS = {
+    "docs_out": "CASE WHEN size(spans) > 0 THEN 1 ELSE 0 END",
+    "spans_out": "size(spans)",
+    "fallback_pages": "fallback_pages",
+    "pages_in": "pages_in",
+    "fallback_docs": "CASE WHEN fallback_pages > 0 THEN 1 ELSE 0 END",
+}
 
-    Input side: one agg over just (part, size(spans)) — column pruning keeps
-    the scan narrow.  Output side: one agg over the snapshot files just
-    written (orders of magnitude smaller than the input at corpus scale).
-    The extraction itself runs exactly once; no cache, no second parse."""
-    in_rows = (input_batch.groupBy(PART_COL).agg(
+
+def _observe_output(result: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    sums = [F.expr(f"sum(CASE WHEN {PART_COL} = {p} THEN {e} ELSE 0 END)").alias(f"{k}_{p}")
+            for p in batch for k, e in _OUT_METRICS.items()]
+    return result.observe(obs, *sums), obs
+
+
+def _input_counts(docs: DataFrame, parts: list[int]) -> dict[int, dict]:
+    """Input-side lineage for every partition this run commits, in one
+    narrow aggregate (column pruning keeps the scan to doc_id + spans)."""
+    rows = (docs.filter(F.col(PART_COL).isin(parts)).groupBy(PART_COL).agg(
         F.count(F.lit(1)).alias("docs_in"),
         F.sum(F.when(F.size("spans") <= 0, 1).otherwise(0)).alias("empty_docs"),
     ).collect())
-    out_rows = (written.groupBy(PART_COL).agg(
-        F.sum(F.when(F.size("spans") > 0, 1).otherwise(0)).alias("docs_out"),
-        F.sum(F.size("spans")).alias("spans_out"),
-        F.sum("fallback_pages").alias("fallback_pages"),
-        F.sum("pages_in").alias("pages_in"),
-        F.sum(F.when(F.col("fallback_pages") > 0, 1).otherwise(0)).alias("fallback_docs"),
-    ).collect())
+    return {r[PART_COL]: {"docs_in": r["docs_in"], "empty_docs": r["empty_docs"]}
+            for r in rows}
+
+
+def _in_background(spark: SparkSession, fn, *args) -> Future:
+    """`fn(*args)` on a thread that inherits the caller's Spark job
+    properties (job group, description, scheduler pool); its result or
+    error comes back through the Future."""
+    fut: Future = Future()
+
+    def run():
+        try:
+            fut.set_result(fn(*args))
+        except Exception as e:  # re-raised by fut.result() in the caller
+            fut.set_exception(e)
+
+    InheritableThread(run, session=spark).start()
+    return fut
+
+
+def _partition_metrics(batch: list[int], inputs: dict[int, dict],
+                       observed: dict) -> dict[int, dict]:
+    """Per-partition lineage row fields (FIXTURES.md §5) for every partition
+    of one commit: input counts from `_input_counts`, output sums from the
+    commit's write-pass Observation (`observed`; its sums are null for a
+    partition that wrote no rows).  The extraction runs exactly once and
+    no commit reads its own snapshot back."""
     m: dict[int, dict] = {}
-    for r in in_rows:
-        m.setdefault(r[PART_COL], {}).update(docs_in=r["docs_in"], empty_docs=r["empty_docs"])
-    for r in out_rows:
-        d = m.setdefault(r[PART_COL], {})
-        d.update(docs_out=r["docs_out"] or 0, spans_out=r["spans_out"] or 0,
-                 fallback_pages=r["fallback_pages"] or 0, pages_in=r["pages_in"] or 0,
-                 fallback_docs=r["fallback_docs"] or 0)
-    for d in m.values():
-        d["skipped_docs"] = d.get("docs_in", 0) - d.get("docs_out", 0)
+    for p in batch:
+        d = {"docs_in": 0, "empty_docs": 0, **inputs.get(p, {})}
+        for k in _OUT_METRICS:
+            d[k] = observed[f"{k}_{p}"] or 0
+        d["skipped_docs"] = d["docs_in"] - d["docs_out"]
         # S29 reason codes (reference: 400-empty vs unprocessable,
         # app/api.py:86-98,137-139): every quarantined doc is attributed
-        d["reason_empty_payload"] = d.get("empty_docs", 0)
+        d["reason_empty_payload"] = d["empty_docs"]
         d["reason_no_content"] = d["skipped_docs"] - d["reason_empty_payload"]
+        m[p] = d
     return m
 
 
@@ -115,6 +152,13 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     batches = [todo[i:i + step] for i in range(0, len(todo), step)]
     if max_commits is not None:
         batches = batches[:max_commits]
+    if collect_metrics:
+        # the run's one input-lineage aggregate runs beside the first
+        # commit's extract and write, on the cores their skewed stages leave
+        # idle; a commit's metrics_s is the lineage time on its own path
+        # (the wait for this aggregate included)
+        inputs = _in_background(spark, _input_counts, docs,
+                                [p for b in batches for p in b])
 
     for batch in batches:
         input_batch = docs.filter(F.col(PART_COL).isin(batch))
@@ -126,23 +170,28 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
         # docs whose extraction yields zero spans stay as quarantine rows
         # (empty spans array — the reference's counted-and-skipped semantics,
         # app/api.py:86-98) and are filtered out by read_spans.  Per-partition
-        # metrics then come from the written snapshot, so the extraction runs
-        # exactly once per batch.
+        # output metrics are observed on the write pass itself, so the
+        # extraction runs exactly once per batch and nothing is read back.
         skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
                         .otherwise(F.lit("no_extractable_content")))
         result = detailed.select("doc_id", "spans", "fallback_pages",
                                  "pages_in", skip_reason.alias("skip_reason"),
                                  PART_COL)
+        if collect_metrics:
+            result, obs = _observe_output(result, batch)
+        t0 = time.perf_counter()
         manifest = table.append(result, run_id, partitions=batch,
                                 extra={"engine": engine, "n_parts": n_parts},
                                 cluster_by=list(cluster_by or ()))
+        timings = {"write_s": time.perf_counter() - t0, "metrics_s": 0.0}
         if collect_metrics:
-            written = table.read_snapshot(spark, manifest["snapshot_id"])
-            metrics = _partition_metrics(input_batch, written) if written is not None else {}
-            for p in batch:
-                metrics.setdefault(p, {})
+            t0 = time.perf_counter()
+            metrics = _partition_metrics(batch, inputs.result(), obs.get)
             table.update_metrics(manifest["snapshot_id"], metrics)
-            manifest["partitions"] = {str(p): metrics.get(p, {}) for p in sorted(batch)}
+            manifest["partitions"] = {str(p): metrics[p] for p in sorted(batch)}
+            timings["metrics_s"] = time.perf_counter() - t0
+        table.update_manifest(manifest["snapshot_id"], {"timings": timings})
+        manifest["timings"] = timings
         summary.commits.append(manifest)
     return summary
 
