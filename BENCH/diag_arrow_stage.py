@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Dissect the arrow-engine wall time: shuffle floor, no-op Python stage
-(plumbing floor), pyarrow-native kernel vs pandas-object kernel.
+(plumbing floor), pyarrow-native kernel against the Catalyst parse.
 
 Usage: SPARK_GRAFT_CPUS=32 python BENCH/diag_arrow_stage.py [rep]
 """
@@ -72,7 +72,6 @@ def main() -> int:
     timed("shuffle + noop mapInArrow",
           shuffled.mapInArrow(noop_kernel, pipeline.PARSED_DDL))
     timed("arrow parse (pyarrow kernel)", pipeline.parse_arrow(rows))
-    timed("pandas parse (object kernel)", pipeline.parse_pandas(rows))
     return 0
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .io.icelite import PART_COL, IceLite, with_part
 from .operators.curation import corpus_build
+from .session import pin
 
 CURATED_TABLE = "curated"
 
@@ -64,7 +65,7 @@ def run_curation_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     # atomically with the data — a crash anywhere before append leaves no
     # snapshot (clean rerun), a crash after leaves a complete one; there
     # is no window where data is committed but lineage is lost.
-    staged = result.localCheckpoint(eager=True)
+    staged = pin(result, eager=True)
 
     funnel = {
         "docs_in": int(obs["in"].get["n"]),

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .io.icelite import PART_COL, IceLite, with_part
 from .operators.dedup import CC_MAX_ITERS, connected_components
+from .session import pin
 
 CLUSTERS_TABLE = "dedup_clusters"
 
@@ -74,7 +75,7 @@ def run_cluster_job(spark: SparkSession, docs: DataFrame, pairs: DataFrame,
     # stage-then-commit (curation_job's discipline): the staging action
     # values the cluster stats and per-part counts, so the append's
     # manifest carries complete lineage atomically with the data
-    staged = result.localCheckpoint(eager=True)
+    staged = pin(result, eager=True)
 
     stats = staged.agg(
         F.countDistinct("cluster_id").alias("n_clusters"),

@@ -54,6 +54,19 @@ _OUT_METRICS = {
 }
 
 
+def spans_rows(assembled: DataFrame, n_parts: int) -> DataFrame:
+    """The spans-table row for `pipeline.assemble` output, shared by the
+    batch job and the stream.  Docs whose extraction yields zero spans stay
+    as quarantine rows (empty spans array, skip_reason set — the
+    reference's counted-and-skipped semantics, app/api.py:86-98) and are
+    filtered out by read_spans."""
+    skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
+                    .otherwise(F.lit("no_extractable_content")))
+    return with_part(assembled, n_parts).select(
+        "doc_id", "spans", "fallback_pages", "pages_in",
+        skip_reason.alias("skip_reason"), PART_COL)
+
+
 def _observe_output(result: DataFrame, batch: list[int]) -> tuple[DataFrame, Observation]:
     obs = Observation()
     sums = [F.expr(f"sum(CASE WHEN {PART_COL} = {p} THEN {e} ELSE 0 END)").alias(f"{k}_{p}")
@@ -131,6 +144,7 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
     request parameters, app/api.py:69-70) applied before the span explode.
     ocr_pipeline: converter-chain choice fast/full/hybrid (the reference's
     OcrPipeline request param, api.py:69 — see pipeline.assemble)."""
+    pipeline.check_engine(engine)
     table = IceLite(warehouse, SPANS_TABLE)
     # resume safety: committed partition ids are only meaningful under the
     # SAME bucketing — resuming with a different n_parts would skip wrong
@@ -164,19 +178,12 @@ def run_extraction_job(spark: SparkSession, docs: DataFrame, warehouse: str,
         input_batch = docs.filter(F.col(PART_COL).isin(batch))
         parsed = pipeline.ENGINES[engine](
             pipeline.explode_spans(input_batch, first_page, last_page))
-        detailed = with_part(
+        # doc-level lineage (fallback_pages, pages_in) is stored in the
+        # table.  Per-partition output metrics are observed on the write
+        # pass itself, so the extraction runs exactly once per batch and
+        # nothing is read back.
+        result = spans_rows(
             pipeline.assemble(parsed, ocr_pipeline=ocr_pipeline), n_parts)
-        # doc-level lineage (fallback_pages, pages_in) is stored in the table;
-        # docs whose extraction yields zero spans stay as quarantine rows
-        # (empty spans array — the reference's counted-and-skipped semantics,
-        # app/api.py:86-98) and are filtered out by read_spans.  Per-partition
-        # output metrics are observed on the write pass itself, so the
-        # extraction runs exactly once per batch and nothing is read back.
-        skip_reason = (F.when(F.size("spans") > 0, F.lit(None).cast("string"))
-                        .otherwise(F.lit("no_extractable_content")))
-        result = detailed.select("doc_id", "spans", "fallback_pages",
-                                 "pages_in", skip_reason.alias("skip_reason"),
-                                 PART_COL)
         if collect_metrics:
             result, obs = _observe_output(result, batch)
         t0 = time.perf_counter()

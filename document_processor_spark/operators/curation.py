@@ -26,13 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
 from .dedup import (
     MINHASH_P,
     N_BANDS,
     _MINHASH_AB,
     _SQL_SHINGLES,
     _docs,
-    _pin,
     _shingle_ints_col,
     _shingles_col,
 )
@@ -143,8 +143,8 @@ def q_cur_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the signature table feeds THREE consumers (the eval distinct,
     # the train band explode, and the final train left-join) — unpinned,
     # the shingle + md5 + band-minhash build ran three times per query.
-    sigs = _pin(sh.withColumn("xs", _shingle_ints_col())
-                .select("doc_id", _screen_sigs_col().alias("sigs")))
+    sigs = pin(sh.withColumn("xs", _shingle_ints_col())
+               .select("doc_id", _screen_sigs_col().alias("sigs")))
     eval_sigs = (sigs.filter(F.col("doc_id") % EVAL_MOD == 0)
                  .select(F.explode("sigs").alias("bs"))
                  .select("bs.band", "bs.mh").distinct())
@@ -510,7 +510,7 @@ def corpus_build(d: DataFrame, with_observations: bool = False):
             .withColumn("keeper", F.min("doc_id").over(w_hash))
             .filter(F.col("doc_id") == F.col("keeper"))
             .select("doc_id", "source", "text"))
-    kept = _pin(kept)  # two consumers (narrow stats + shingle explode)
+    kept = pin(kept)  # two consumers (narrow stats + shingle explode)
 
     eval_sh = (d.filter(F.col("doc_id") % EVAL_MOD == 0)
                .select(F.explode(_shingles_col()).alias("shingle"))
@@ -520,7 +520,7 @@ def corpus_build(d: DataFrame, with_observations: bool = False):
                          F.size(_shingles_col()).alias("n_sh"))
     if with_observations:
         # the keeper counter rides on the single-consumer narrow branch,
-        # BELOW the _pin: an Observation directly under a lazy
+        # BELOW the pin: an Observation directly under a lazy
         # localCheckpoint latches n=0 — the checkpoint's own
         # query-execution-end event carries the CollectMetrics node before
         # any task has run (empirically verified; the upstream in/passed

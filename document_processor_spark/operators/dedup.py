@@ -23,6 +23,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from ..session import pin
 from ._scan import fan_out
 
 N_BANDS = 8
@@ -42,26 +43,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (skipped adaptively when the scan already parallelizes — see _scan)
     return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"),
                    f"{sf_dir}/documents.parquet")
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialization pin for an intermediate referenced by several plan
-    branches.  Lazy localCheckpoint instead of persist(): the backing RDD
-    blocks are released by the ContextCleaner as soon as the DataFrame is
-    garbage-collected, so repeated driver queries in a long-lived session
-    don't accumulate pinned caches (persist() entries sit in the
-    CacheManager until manually unpersisted — the r1 cache leak).
-
-    localCheckpoint blocks are NOT fault-tolerant: an executor loss
-    recomputes from nothing.  A cluster run sets
-    ``spark.document_processor.pin=checkpoint`` (plus
-    ``sc.setCheckpointDir`` to a durable store) to pin via a RELIABLE
-    checkpoint instead — the write costs one extra pass but survives
-    executor loss, which at 10^12-row scale is a certainty, not a risk."""
-    sess = df.sparkSession
-    if sess.conf.get("spark.document_processor.pin", "local") == "checkpoint":
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,16 +203,16 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates → exact Jaccard verify.  The pin on the shingle sets serves
     the signature build and both sides of the verify join."""
     d = _docs(spark, sf_dir)
-    sh = _pin(d.select("doc_id", _shingles_col().alias("shingles"))
-              .filter(F.size("shingles") > 0))
+    sh = pin(d.select("doc_id", _shingles_col().alias("shingles"))
+             .filter(F.size("shingles") > 0))
     # r6: the signature table is pinned too — it feeds BOTH sides of the
     # bucket self-join, and without the pin each side re-ran the md5 pass
     # (_shingle_ints_col) and all bands*r minhash folds.  The pinned rows
     # are narrow (doc_id, band, mh): one signature computation total.
-    sig = _pin(sh.withColumn("xs", _shingle_ints_col())
-               .select("doc_id", F.explode(_band_sigs_col()).alias("bs"))
-               .select("doc_id", F.col("bs.band").alias("band"),
-                       F.col("bs.mh").alias("mh")))
+    sig = pin(sh.withColumn("xs", _shingle_ints_col())
+              .select("doc_id", F.explode(_band_sigs_col()).alias("bs"))
+              .select("doc_id", F.col("bs.band").alias("band"),
+                      F.col("bs.mh").alias("mh")))
     cand = (sig.alias("a").join(sig.alias("b"), ["band", "mh"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
@@ -315,15 +296,15 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     exceeds any fixture posting length, so small-scale results are exact;
     at 10^12 docs the stoplist is what bounds the worst-case join."""
     d = _docs(spark, sf_dir)
-    sh = _pin(d.select("doc_id", "source", "lang",
-                       _shingles_col().alias("shingles"))
-              .filter(F.size("shingles") > 0))
+    sh = pin(d.select("doc_id", "source", "lang",
+                      _shingles_col().alias("shingles"))
+             .filter(F.size("shingles") > 0))
     post = sh.select("source", "lang", "doc_id",
                      F.size("shingles").alias("n"),
                      F.explode("shingles").alias("s"))
-    hot = _pin(post.groupBy("source", "lang", "s")
-               .agg(F.count(F.lit(1)).alias("df_s"))
-               .filter(F.col("df_s") > hot_shingle_max))
+    hot = pin(post.groupBy("source", "lang", "s")
+              .agg(F.count(F.lit(1)).alias("df_s"))
+              .filter(F.col("df_s") > hot_shingle_max))
     n_hot = hot.count()  # tiny by construction (shingles above the cap)
     if n_hot:
         _log.warning(
@@ -403,8 +384,8 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection counts are computed ONLY for surviving pairs, never all
     pairs.  jacc_ppm = inter*1e6 div union: integer end-to-end."""
     d = _docs(spark, sf_dir)
-    sh = _pin(d.select("doc_id", _shingles_col().alias("shingles"))
-              .filter(F.size("shingles") > 0))
+    sh = pin(d.select("doc_id", _shingles_col().alias("shingles"))
+             .filter(F.size("shingles") > 0))
     post = sh.select("doc_id",
                      F.size("shingles").cast("bigint").alias("n"),
                      F.explode("shingles").alias("s"))
@@ -420,10 +401,10 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.struct(F.col("df_s"), F.col("s")))).alias("by_rarity")))
     # r6: the prefix index feeds BOTH sides of the candidate self-join —
     # unpinned, the dfreq shuffle + rarity sort + slice ran once per side.
-    prefix = _pin(ordered
-                  .select("doc_id", "n",
-                          F.explode(F.slice("by_rarity", 1, p)).alias("tok"))
-                  .select("doc_id", "n", F.col("tok.s").alias("s")))
+    prefix = pin(ordered
+                 .select("doc_id", "n",
+                         F.explode(F.slice("by_rarity", 1, p)).alias("tok"))
+                 .select("doc_id", "n", F.col("tok.s").alias("s")))
     a = prefix.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"),
                       "s")
     b = prefix.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"),
@@ -544,7 +525,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk_idx, chunk_value) — a shuffle hash join whose fan-out is bounded
     by chunk-bucket size, never O(N²).  Exact bit_count(xor) verifies, and
     distinct collapses pairs that agree on several chunks."""
-    sig = _pin(q_dedup_simhash(spark, sf_dir))
+    sig = pin(q_dedup_simhash(spark, sf_dir))
     bits_per = SIMHASH_BITS // N_SIMHASH_CHUNKS  # 16//3 = 5; last chunk gets the rest
     chunked = sig.select(
         "doc_id", "simhash",
@@ -657,8 +638,8 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation-independent bit-for-bit (IEEE multiply is commutative),
     so emitting least/greatest vec_id preserves oracle parity."""
     B = COSINE_BLOCKS
-    e = _pin(_emb_vn(spark, sf_dir)
-             .withColumn("g", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int")))
+    e = pin(_emb_vn(spark, sf_dir)
+            .withColumn("g", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int")))
     lo = (e.withColumn("gb", F.explode(F.sequence(F.col("g"), F.lit(B - 1))))
           .select(F.col("g").alias("ga"), "gb",
                   F.col("vec_id").alias("id_a"), F.col("v").alias("v_a"),
@@ -745,7 +726,7 @@ def q_dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, the self-equi-join on (table, bucket) bounds candidates, AQE
     splits hot buckets, and a pair colliding in several tables is deduped
     by the final distinct (identical doubles -> identical rounded rows)."""
-    e = _pin(_emb_vn(spark, sf_dir))
+    e = pin(_emb_vn(spark, sf_dir))
     tb = ", ".join(
         f"named_struct('t', {t}, 'bucket', {_cat_bucket('v', t)})"
         for t in range(N_TABLES))
@@ -824,16 +805,16 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS,
     rounds: list[int] = []
     converged = False
     if algo == "propagate":
-        edges = _pin(pairs.union(
+        edges = pin(pairs.union(
             pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))))
-        labels = _pin(edges.select(F.col("d1").alias("node")).distinct()
-                      .select("node", F.col("node").alias("label")))
+        labels = pin(edges.select(F.col("d1").alias("node")).distinct()
+                     .select("node", F.col("node").alias("label")))
         for _ in range(max_iters):
             prop = (edges.join(labels, edges["d1"] == labels["node"])
                     .select(F.col("d2").alias("node"), "label"))
-            new_labels = _pin(labels.select("node", "label").union(prop)
-                              .groupBy("node")
-                              .agg(F.min("label").alias("label")))
+            new_labels = pin(labels.select("node", "label").union(prop)
+                             .groupBy("node")
+                             .agg(F.min("label").alias("label")))
             changed = (new_labels.alias("n")
                        .join(labels.alias("o"), "node")
                        .filter(F.col("n.label") != F.col("o.label")).count())
@@ -845,9 +826,9 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS,
     elif algo == "star":
         # state: a deduped directed edge list; at convergence it is a
         # union of stars, every node pointing at its component minimum
-        edges = _pin(pairs.select(F.col("d1").alias("u"),
-                                  F.col("d2").alias("v"))
-                     .filter(F.col("u") != F.col("v")).distinct())
+        edges = pin(pairs.select(F.col("d1").alias("u"),
+                                 F.col("d2").alias("v"))
+                    .filter(F.col("u") != F.col("v")).distinct())
         for _ in range(max_iters):
             sym = edges.union(edges.select(F.col("v").alias("u"),
                                            F.col("u").alias("v")))
@@ -865,7 +846,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS,
             oriented = (large.select(F.greatest("u", "v").alias("b"),
                                      F.least("u", "v").alias("s")))
             smin = oriented.groupBy("b").agg(F.min("s").alias("m"))
-            small = _pin(
+            small = pin(
                 oriented.join(smin, "b")
                 .select(F.col("s").alias("u"), F.col("m").alias("v"))
                 .union(smin.select(F.col("b").alias("u"),
@@ -994,7 +975,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale a KMeans sketch supplies them — same dataflow.  Output is one
     row per vector: its cell, keep/prune decision, and the pruning
     neighbor (min qualifying lower vec_id) for auditability."""
-    e = _pin(_emb_vn(spark, sf_dir))
+    e = pin(_emb_vn(spark, sf_dir))
     carr = (e.filter(F.col("vec_id") % SEM_CENT_MOD == 0)
             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"),
                     F.col("nrm").alias("cnrm"))
@@ -1285,13 +1266,13 @@ def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     end).  Ranks are integer-quantized (floor(rank*1e6) as BIGINT) —
     the float-output discipline."""
     pairs = q_dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
-    edges = _pin(
+    edges = pin(
         pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
         .union(pairs.select(F.col("d2").alias("u"), F.col("d1").alias("v")))
         .distinct())
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    ewd = _pin(edges.join(deg, "u"))
-    nodes = _pin(edges.select(F.col("u").alias("node")).distinct())
+    ewd = pin(edges.join(deg, "u"))
+    nodes = pin(edges.select(F.col("u").alias("node")).distinct())
     r = nodes.select("node", F.lit(1.0).alias("rank"))
     for _ in range(PR_ITERS):
         x = (ewd.join(r, ewd["u"] == r["node"])
@@ -1490,11 +1471,11 @@ def q_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triangle_counts(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Degree-ordered triangle counting over an undirected pair list —
     see :func:`q_dedup_triangles` for the dataflow rationale."""
-    e = _pin(pairs.select(F.least("d1", "d2").alias("a"),
-                          F.greatest("d1", "d2").alias("b")).distinct())
-    deg = _pin(e.select(F.col("a").alias("n"))
-               .union(e.select(F.col("b").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
+    e = pin(pairs.select(F.least("d1", "d2").alias("a"),
+                         F.greatest("d1", "d2").alias("b")).distinct())
+    deg = pin(e.select(F.col("a").alias("n"))
+              .union(e.select(F.col("b").alias("n")))
+              .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
     lower_first = ((F.col("da") < F.col("db"))
                    | ((F.col("da") == F.col("db"))
                       & (F.col("a") < F.col("b"))))
@@ -1506,7 +1487,7 @@ def triangle_counts(docs: DataFrame, pairs: DataFrame) -> DataFrame:
                   .alias("u"),
                   F.when(lower_first, F.col("b")).otherwise(F.col("a"))
                   .alias("v")))
-    ed = _pin(ed)
+    ed = pin(ed)
     wed = (ed.alias("e1")
            .join(ed.alias("e2"), (F.col("e1.u") == F.col("e2.u"))
                  & (F.col("e1.v") < F.col("e2.v")))
@@ -1658,12 +1639,12 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratically as the knob tightens for bigger corpora; integer
     percent math end to end."""
     B = COSINE_BLOCKS
-    sh = _pin(_docs(spark, sf_dir)
-              .filter(_lsh_eval_hash(F.col("doc_id")) < LSH_EVAL_T)
-              .select("doc_id", _shingles_col().alias("sh"))
-              .filter(F.size("sh") > 0)
-              .withColumn("g", F.pmod(F.xxhash64("doc_id"),
-                                      F.lit(B)).cast("int")))
+    sh = pin(_docs(spark, sf_dir)
+             .filter(_lsh_eval_hash(F.col("doc_id")) < LSH_EVAL_T)
+             .select("doc_id", _shingles_col().alias("sh"))
+             .filter(F.size("sh") > 0)
+             .withColumn("g", F.pmod(F.xxhash64("doc_id"),
+                                     F.lit(B)).cast("int")))
     lo = (sh.withColumn("gb", F.explode(F.sequence(F.col("g"), F.lit(B - 1))))
           .select(F.col("g").alias("ga"), "gb",
                   F.col("doc_id").alias("id_a"), F.col("sh").alias("s_a")))
@@ -1678,15 +1659,15 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify and the whole LSH pipeline ran twice per query.  The pinned
     # frames are tiny (two-column pair sets), so the materialization is
     # free next to the recompute it saves.
-    truth = _pin(lo.join(hi, ["ga", "gb"])
-                 .filter((F.col("ga") != F.col("gb"))
-                         | (F.col("id_a") < F.col("id_b")))
-                 .filter(jac >= MINHASH_JACCARD_T)
-                 .select(F.least("id_a", "id_b").alias("d1"),
-                         F.greatest("id_a", "id_b").alias("d2")))
-    lsh = _pin(q_dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
-               .filter((_lsh_eval_hash(F.col("d1")) < LSH_EVAL_T)
-                       & (_lsh_eval_hash(F.col("d2")) < LSH_EVAL_T)))
+    truth = pin(lo.join(hi, ["ga", "gb"])
+                .filter((F.col("ga") != F.col("gb"))
+                        | (F.col("id_a") < F.col("id_b")))
+                .filter(jac >= MINHASH_JACCARD_T)
+                .select(F.least("id_a", "id_b").alias("d1"),
+                        F.greatest("id_a", "id_b").alias("d2")))
+    lsh = pin(q_dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
+              .filter((_lsh_eval_hash(F.col("d1")) < LSH_EVAL_T)
+                      & (_lsh_eval_hash(F.col("d2")) < LSH_EVAL_T)))
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
     n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
     n_hit = (truth.join(lsh, ["d1", "d2"])

@@ -17,6 +17,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..session import pin
 from ._scan import fan_out
 
 MEDIA_SCHEMA = ("doc_id bigint, media_ref string, media_type string, "
@@ -723,8 +724,8 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
              .cast("bigint").alias("doc_id"),
             F.col("content").alias("payload"),
             F.lit("").alias("media_type"))
-        out = (feats.mapInPandas(_decode_batches, DECODE_SCHEMA)
-               .localCheckpoint(eager=True))
+        out = pin(feats.mapInPandas(_decode_batches, DECODE_SCHEMA),
+                  eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import contract as C
 from .. import pipeline
+from ..session import pin
 from ._scan import fan_out
 from ._scan import scratch_dir as _scratch_dir
 
@@ -413,10 +414,9 @@ def q_extract_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.from_json("value", INPUT_DDL).alias("d"))
                 .select("d.doc_id", "d.spans"))
         out = pipeline.extract_documents(back, engine="sql")
-        result = (out.select("doc_id", F.explode("spans").alias("s"))
-                  .select("doc_id", "s.kind", "s.text", "s.media_ref",
-                          "s.offset")
-                  .localCheckpoint(eager=True))
+        result = pin(out.select("doc_id", F.explode("spans").alias("s"))
+                     .select("doc_id", "s.kind", "s.text", "s.media_ref",
+                             "s.offset"), eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return result
@@ -464,10 +464,9 @@ def q_extract_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                           s["media_ref"].alias("media_ref"),
                           s["offset"].alias("offset"))).alias("spans")))
         out = pipeline.extract_documents(nested, engine="sql")
-        result = (out.select("doc_id", F.explode("spans").alias("s"))
-                  .select("doc_id", "s.kind", "s.text", "s.media_ref",
-                          "s.offset")
-                  .localCheckpoint(eager=True))
+        result = pin(out.select("doc_id", F.explode("spans").alias("s"))
+                     .select("doc_id", "s.kind", "s.text", "s.media_ref",
+                             "s.offset"), eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return result
@@ -494,10 +493,9 @@ def q_extract_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
          .write.mode("overwrite").orc(str(base / "out")))
         back = spark.read.orc(str(base / "out")).select("doc_id", "spans")
         out = pipeline.extract_documents(back, engine="sql")
-        result = (out.select("doc_id", F.explode("spans").alias("s"))
-                  .select("doc_id", "s.kind", "s.text", "s.media_ref",
-                          "s.offset")
-                  .localCheckpoint(eager=True))
+        result = pin(out.select("doc_id", F.explode("spans").alias("s"))
+                     .select("doc_id", "s.kind", "s.text", "s.media_ref",
+                             "s.offset"), eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return result

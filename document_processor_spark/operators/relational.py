@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from ..session import pin
 from ._scan import fan_out
 
 SESSION_GAP_S = 1800
@@ -636,17 +637,16 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-sized data (bounded by the time horizon, never by event
     volume).  The carried value is copied, never re-aggregated, so both
     engines emit bit-identical doubles."""
-    from .dedup import _pin
 
     ev = _t(spark, sf_dir, "events")
     m = ev.agg(F.min("ts").alias("t0"))
     hb = F.floor(F.expr("timestampdiff(MICROSECOND, t0, ts)")
                  / 3_600_000_000.0).cast("bigint")
-    agg = _pin(ev.crossJoin(F.broadcast(m))
-               .groupBy(hb.alias("hb"), "event_type")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("value").cast("decimal(18,4)"))
-                    .cast("double").alias("sv")))
+    agg = pin(ev.crossJoin(F.broadcast(m))
+              .groupBy(hb.alias("hb"), "event_type")
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(F.col("value").cast("decimal(18,4)"))
+                   .cast("double").alias("sv")))
     mx = agg.agg(F.max("hb").alias("mb"))
     types = ev.select("event_type").distinct()
     spine = (types.crossJoin(F.broadcast(mx))

@@ -98,7 +98,7 @@ class _pinned_state_partitions:
 def _sink_name(spark: SparkSession, name: str) -> str:
     """FIXED per-query memory-sink name, dropped before each run: a fresh
     uuid per invocation leaks one materialized result table per run into
-    the shared long-lived session (the r1 cache-leak class _pin() was
+    the shared long-lived session (the r1 cache-leak class session.pin() was
     built to kill) — a fixed name bounds growth to one retained table per
     query.  dropTempView is a no-op bool when absent."""
     spark.catalog.dropTempView(name)

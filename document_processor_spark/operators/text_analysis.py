@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..session import pin
 from ._scan import fan_out
 
 STOPWORDS = {
@@ -874,11 +875,10 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k BM25 matches per query document (its distinct words are the
     query terms).  idf = ln(1 + (N - df + 0.5)/(df + 0.5)); ties break
     score DESC, doc_id ASC."""
-    from .dedup import _pin
     d = _docs(spark, sf_dir).filter(F.length("text") > 0)
     # tf feeds FOUR plan branches (dl, dfreq, qt, the candidate probe) —
     # pin it so the tokenize/explode/groupBy corpus pass runs once
-    tf = _pin(
+    tf = pin(
         d.select("doc_id", F.explode(F.split("text", " ", -1)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")))
@@ -1351,12 +1351,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, which is exactly why BPE trainers operate on the vocab table.
 
     Output: the merge table — (round, w1, w2, merged, pair_count)."""
-    from .dedup import _pin
-    vocab = _pin(_bpe_vocab0(spark, sf_dir))
+    vocab = pin(_bpe_vocab0(spark, sf_dir))
     winners = []
     for r in range(BPE_ROUNDS):
         win, vocab = _bpe_round(vocab)
-        vocab = _pin(vocab)
+        vocab = pin(vocab)
         winners.append(win.select(
             F.lit(r).alias("round"),
             F.split_part("pr", F.lit(" "), F.lit(1)).alias("w1"),
@@ -1499,12 +1498,11 @@ def _bpe_chain_sql(seq_expr: str) -> str:
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _pin
-    vocab = _pin(_bpe_vocab0(spark, sf_dir))
+    vocab = pin(_bpe_vocab0(spark, sf_dir))
     merges = None
     for r in range(BPE_ROUNDS):
         win, vocab = _bpe_round(vocab)
-        vocab = _pin(vocab)
+        vocab = pin(vocab)
         one = win.select(F.col("pr").alias(f"pr{r}"))
         merges = one if merges is None else merges.crossJoin(one)
 
@@ -1646,11 +1644,10 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked by exact-adjacency occurrence count; ties break doc_id ASC."""
     from pyspark.sql import Window as W
 
-    from .dedup import _pin
     d = _docs(spark, sf_dir).filter(F.length("text") > 0)
     # postings feed THREE plan branches (query build, w1 probe, adjacency
     # check) — pin so the tokenize/explode corpus pass runs once
-    post = _pin(
+    post = pin(
         d.select("doc_id", F.posexplode(F.split("text", " ", -1))
                  .alias("pos", "word"))
         .filter(F.col("word") != ""))
@@ -1868,15 +1865,14 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Global top-k is TakeOrderedAndProject on (rank desc, word): the
     deterministic tie-break keeps the boundary stable across engines.
     Ranks integer-quantized (floor(rank*1e6))."""
-    from .dedup import _pin
 
-    edges = _pin(q_skipgram_pairs(spark, sf_dir)
-                 .select(F.col("center").alias("u"),
-                         F.col("context").alias("v"),
-                         F.col("n").cast("double").alias("w")))
+    edges = pin(q_skipgram_pairs(spark, sf_dir)
+                .select(F.col("center").alias("u"),
+                        F.col("context").alias("v"),
+                        F.col("n").cast("double").alias("w")))
     wdeg = edges.groupBy("u").agg(F.sum("w").alias("wdeg"))
-    ewd = _pin(edges.join(wdeg, "u"))
-    nodes = _pin(edges.select(F.col("u").alias("word")).distinct())
+    ewd = pin(edges.join(wdeg, "u"))
+    nodes = pin(edges.select(F.col("u").alias("word")).distinct())
     r = nodes.select("word", F.lit(1.0).alias("rank"))
     for _ in range(TEXTRANK_ITERS):
         x = (ewd.join(r, ewd["u"] == r["word"])
@@ -2009,7 +2005,6 @@ RAKE_STOPS = tuple(sorted({w for ws in STOPWORDS.values() for w in ws}))
 def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from .dedup import _pin
     d = _docs(spark, sf_dir).filter(F.length("text") > 0)
     toks = (d.select("doc_id",
                      F.posexplode(F.split("text", " ", -1))
@@ -2019,7 +2014,7 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
                         | (F.col("word") == "")))
     wseq = (W.partitionBy("doc_id").orderBy("pos")
             .rowsBetween(W.unboundedPreceding, W.currentRow))
-    content = _pin(
+    content = pin(
         toks.withColumn("phrase_id",
                         F.sum(F.col("is_stop").cast("int")).over(wseq))
         .filter(~F.col("is_stop"))
@@ -2169,18 +2164,18 @@ CONTAIN_T_BP = 5000    # emit pairs with containment >= 50% (basis points)
 
 
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _pin, _shingles_col
+    from .dedup import _shingles_col
     # r6: the shingle arrays feed both the document-frequency branch and
     # the stoplist join — pinned, the per-doc shingle build runs once and
     # each branch re-derives its postings by an explode of pinned arrays.
-    d = _pin(_docs(spark, sf_dir).select("doc_id",
-                                         _shingles_col().alias("sh")))
+    d = pin(_docs(spark, sf_dir).select("doc_id",
+                                        _shingles_col().alias("sh")))
     post0 = d.select("doc_id", F.explode("sh").alias("s"))
     df_ = (post0.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
            .filter(F.col("df") <= CONTAIN_STOP))
     # equi-join on s keeps only sub-stoplist shingles; never broadcast —
     # the shingle vocabulary scales with the corpus (ta_bm25's rule)
-    post = _pin(post0.join(df_.select("s"), "s"))
+    post = pin(post0.join(df_.select("s"), "s"))
     sz = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_src"))
     a = post.select(F.col("doc_id").alias("d_src"), "s")
     b = post.select(F.col("doc_id").alias("d_dst"), "s")
@@ -2248,9 +2243,8 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     present).  Output bounded by BOOL_MIN_MATCH threshold."""
     from pyspark.sql import Window as W
 
-    from .dedup import _pin
     d = _docs(spark, sf_dir).filter(F.length("text") > 0)
-    post = _pin(
+    post = pin(
         d.select("doc_id", F.explode(F.split("text", " ", -1)).alias("word"))
         .filter(F.col("word") != "").distinct())
     wq = W.partitionBy("query_id").orderBy("word")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_spark(app: str = "document-processor-spark",
@@ -83,6 +83,28 @@ def build_spark(app: str = "document-processor-spark",
         # exactly as a real cluster submit would (--py-files engine.zip)
         spark.sparkContext.addPyFile(_engine_zip())
     return spark
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialization pin: the one place the engine cuts a plan's lineage,
+    for an intermediate referenced by several plan branches (lazy) or a
+    staged result that must exist before a commit or a scratch-dir
+    cleanup (eager).  localCheckpoint instead of persist(): the backing
+    RDD blocks are released by the ContextCleaner as soon as the DataFrame
+    is garbage-collected, so repeated queries in a long-lived
+    session don't accumulate pinned caches (persist() entries sit in the
+    CacheManager until manually unpersisted — the r1 cache leak).
+
+    localCheckpoint blocks are NOT fault-tolerant: an executor loss
+    recomputes from nothing.  A cluster run sets
+    ``spark.document_processor.pin=checkpoint`` (plus
+    ``sc.setCheckpointDir`` to a durable store) to pin via a RELIABLE
+    checkpoint instead — the write costs one extra pass but survives
+    executor loss, which at 10^12-row scale is a certainty, not a risk."""
+    conf = df.sparkSession.conf
+    if conf.get("spark.document_processor.pin", "local") == "checkpoint":
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def _engine_zip() -> str:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_sig_rows, classify_against_store, fingerprints
+from ..session import pin
 
 HASH_DDL = "content_hash string"
 SIG_DDL = "band int, mh string"
@@ -77,7 +78,7 @@ def make_dedup_processor(store_dir: str, out_dir: str):
     rewrites identical content instead of double-appending."""
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fp = fingerprints(batch_df).localCheckpoint(eager=False)
+        fp = pin(fingerprints(batch_df))
         sig = band_sig_rows(fp)
 
         # intra-batch exact resolution: only the min-doc_id keeper of each
@@ -100,7 +101,7 @@ def make_dedup_processor(store_dir: str, out_dir: str):
         cls = classify_against_store(
             keepers, sig.join(keeper_ids, "doc_id", "leftsemi"),
             hist_hash, hist_sig)
-        result = cls.unionByName(copies).localCheckpoint(eager=True)
+        result = pin(cls.unionByName(copies), eager=True)
         result.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
         new_ids = result.filter(F.col("status") == "new").select("doc_id")

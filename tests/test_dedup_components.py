@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from document_processor_spark.operators import dedup
+from document_processor_spark.session import pin
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -95,18 +96,62 @@ def test_components_converges_on_long_chain(spark, monkeypatch, tmp_path):
 
 
 def test_pin_reliable_checkpoint_mode(spark, tmp_path):
-    """spark.document_processor.pin=checkpoint pins via a RELIABLE
-    checkpoint (fault-tolerant at cluster scale) and produces the same
-    rows as the default localCheckpoint pin."""
+    """spark.document_processor.pin=checkpoint turns EVERY pin (lazy and
+    eager, operator intermediates and job staging) into a RELIABLE
+    checkpoint (fault-tolerant at cluster scale), with the same results as
+    the default localCheckpoint pins."""
+    from document_processor_spark.curation_job import (
+        CURATED_TABLE,
+        run_curation_job,
+    )
+    from document_processor_spark.io.icelite import IceLite
+    from document_processor_spark.operators.pipeline_ops import (
+        q_extract_jsonl_roundtrip,
+    )
+
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     df = spark.range(100).withColumnRenamed("id", "v")
-    base = sorted(r["v"] for r in dedup._pin(df).collect())
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def files() -> int:
+        return sum(1 for p in ckpt.rglob("*") if p.is_file())
+
+    def run(mode: str) -> dict:
+        out: dict = {}
+        n = files()
+        lazy = pin(df)
+        out["lazy"] = sorted(r["v"] for r in lazy.collect())
+        out["lazy_wrote"] = files() > n
+        n = files()
+        eager = pin(df, eager=True)
+        out["eager_wrote"] = files() > n  # before any action on the result
+        out["eager"] = sorted(r["v"] for r in eager.collect())
+        n = files()
+        out["jsonl"] = sorted(
+            tuple(r) for r in q_extract_jsonl_roundtrip(spark, SF_DIR).collect())
+        out["jsonl_wrote"] = files() > n
+        n = files()
+        wh = str(tmp_path / f"wh_{mode}")
+        out["funnel"] = run_curation_job(spark, docs, wh, "c1", n_parts=4).funnel
+        out["lineage"] = {r.pop("partition"): (r.pop("snapshot_id"), r)
+                          for r in IceLite(wh, CURATED_TABLE).lineage()}
+        out["curation_wrote"] = files() > n
+        return out
+
+    base = run("local")
+    assert base["lazy"] == base["eager"] == list(range(100))
+    assert base["jsonl"] and base["funnel"]["docs_out"] > 0
+    # the default pins are local: nothing reaches the checkpoint dir
+    assert files() == 0
     spark.conf.set("spark.document_processor.pin", "checkpoint")
     try:
-        out = dedup._pin(df)
-        assert sorted(r["v"] for r in out.collect()) == base
-        # the pin must actually have written a reliable checkpoint
-        ckpt = tmp_path / "ckpt"
-        assert any(p.is_file() for p in ckpt.rglob("*"))
+        got = run("checkpoint")
     finally:
         spark.conf.unset("spark.document_processor.pin")
+    for k in ("lazy_wrote", "eager_wrote", "jsonl_wrote", "curation_wrote"):
+        assert got.pop(k) is True, k
+        assert base.pop(k) is False, k
+    # same rows, and the Observation-carried funnel and per-partition
+    # lineage are unchanged by the reliable pins
+    assert got == base

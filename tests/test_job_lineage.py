@@ -98,3 +98,44 @@ def test_manifest_records_commit_timings(spark, input_df, tmp_path, collect_metr
         t = snap["timings"]
         assert t == commit["timings"]
         assert t["write_s"] > 0 and t["metrics_s"] >= 0
+
+
+def test_unknown_engine_rejected_before_any_work(spark, input_df, monkeypatch, tmp_path):
+    """A bad engine name fails at entry with the valid names, before the
+    run's background input aggregate starts or any snapshot is written."""
+    def started(*_a):
+        raise AssertionError("the input aggregate started for a bad engine")
+
+    monkeypatch.setattr(job, "_input_counts", started)
+    with pytest.raises(ValueError, match=r"\['arrow', 'sql'\]"):
+        run_extraction_job(spark, input_df, str(tmp_path), "r1", n_parts=N_PARTS,
+                           engine="pandas")
+    assert IceLite(str(tmp_path), SPANS_TABLE).snapshots() == []
+
+
+def test_unknown_engine_rejected_at_every_entry(spark, input_df, tmp_path):
+    import importlib.util
+    from pathlib import Path
+
+    from document_processor_spark import pipeline
+    from document_processor_spark.streaming.extract_stream import start_extract_stream
+
+    assert set(pipeline.ENGINES) == {"sql", "arrow"}
+    for entry in (lambda: pipeline.extract_documents(input_df, engine="pandas"),
+                  lambda: pipeline.extract_with_metrics(input_df, engine="pandas"),
+                  lambda: start_extract_stream(spark, str(tmp_path / "in"),
+                                               str(tmp_path / "wh"),
+                                               str(tmp_path / "ckpt"),
+                                               engine="pandas")):
+        with pytest.raises(ValueError, match="unknown engine 'pandas'"):
+            entry()
+    assert not (tmp_path / "wh").exists()
+    # the CLI offers exactly the engine names; argparse exits with usage
+    path = Path(__file__).resolve().parent.parent / "jobs" / "extract.py"
+    spec = importlib.util.spec_from_file_location("extract_cli", path)
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    with pytest.raises(SystemExit) as e:
+        cli.main(["--fixture-sf", "0.001", "--warehouse", str(tmp_path / "wh"),
+                  "--run-id", "r1", "--engine", "pandas"])
+    assert e.value.code == 2
